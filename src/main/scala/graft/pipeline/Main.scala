@@ -28,10 +28,10 @@ object Main {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val store = new TableStore(spark, warehouseDir)
-    val report = new PipelineETL(spark, store, EngineConfig.load())
-      .run(stagingDir, y.toInt, m.toInt)
+    val cfg = EngineConfig.load()
+    val report = new PipelineETL(spark, store, cfg).run(stagingDir, y.toInt, m.toInt)
     println(RunReportJson.render(report))
     spark.stop()
-    if (report.status == EngineConfig.load()("STATUS_FAILURE")) sys.exit(1)
+    if (report.status == cfg("STATUS_FAILURE")) sys.exit(1)
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.config.EngineConfig
 import graft.ingest.{Processors, Staging}
 import graft.model.Schemas
-import graft.ops.Lifecycle
+import graft.ops.{Lifecycle, Relational}
 
 /** Run contract of the reference (`etl_pipeline.py:506-511`,
   * statuses `config.py:40-42`; 8-char run id `__init__.py:64`). */
@@ -29,12 +29,12 @@ final case class RunReport(
   *   CSD/CCD/CSE*.csv          composition cost sheets (two-row header)
   *   Analitico*.csv            composition structure sheet
   *
-  * Load order follows the reference exactly (`etl_pipeline.py:340-380`):
-  * maintenance first (append-ignore + status sync), then dims (upsert),
-  * edges (truncate-reload), facts (append-ignore), then placeholder
-  * repair of referential integrity (J1-J3). Per-sheet failures are
-  * isolated (O2, processor.py:496-500): logged into the report, the rest
-  * of the run proceeds.
+  * Each table is written at most once per run, the maintenance log once per
+  * file: the log (append-ignore), the edges (truncate-reload) and facts
+  * (append-ignore), then each catalog in one overwrite holding the upsert,
+  * the placeholder repair (J1-J3) and the status derivation (W1/J4).
+  * Per-sheet failures are isolated (O2, processor.py:496-500): logged
+  * into the report, the rest of the run proceeds.
   */
 class PipelineETL(spark: SparkSession, store: graft.store.TableStore, cfg: EngineConfig) {
 
@@ -120,15 +120,9 @@ class PipelineETL(spark: SparkSession, store: graft.store.TableStore, cfg: Engin
     def route(pred: String => Boolean): Seq[java.io.File] =
       files.filter(f => pred(f.getName)).toSeq
 
-    // Phase 0: schema bootstrap (S13) — only for tables not yet present,
-    // so monthly re-runs keep history.
-    phase("bootstrap") {
-      Schemas.all.keys.filterNot(store.exists).foreach { t =>
-        store.overwrite(t, store.read(t))
-      }
-    }
-
-    // Phase 2a: maintenance-first (etl_pipeline.py:450-458).
+    // Phase 2a: maintenance first (etl_pipeline.py:450-458), one
+    // append-ignore per file. Statuses are derived from the whole log
+    // once, when the catalogs are written.
     phase("maintenance") {
       route(_.contains("Manuten")).foreach { f =>
         isolated(f.getName) {
@@ -137,7 +131,6 @@ class PipelineETL(spark: SparkSession, store: graft.store.TableStore, cfg: Engin
           val events = Processors.processManutencoes(staged, cfg)
           val n = store.appendIgnore("manutencoes_historico", events)
           inserted("manutencoes_historico") = inserted.getOrElse("manutencoes_historico", 0L) + n
-          syncStatuses()
         }
       }
     }
@@ -182,79 +175,79 @@ class PipelineETL(spark: SparkSession, store: graft.store.TableStore, cfg: Engin
       (analitico, custoFragments)
     }
 
+    // This month's rows per catalog, ATIVO until the status derivation says
+    // otherwise; A4: price-sheet fragments consolidate first-sheet-wins.
+    def asCatalog(table: String, rows: DataFrame): DataFrame = rows
+      .withColumn(if (table == "insumos") "classificacao" else "grupo", lit(null).cast("string"))
+      .withColumn("status", lit(Schemas.Status.Ativo))
+    val incoming = Map(
+      "insumos" -> Option.when(catalogFragments.nonEmpty)(Relational.dedupKeepFirst(
+        catalogFragments.zipWithIndex.map { case (df, i) => df.withColumn("__prio", lit(i)) }
+          .reduce(_ unionByName _), Seq("codigo"), Seq(col("__prio").asc)).drop("__prio")),
+      "composicoes" -> analitico.map(_._1))
+      .collect { case (t, Some(rows)) => t -> asCatalog(t, rows) }
+
+    // Phase 3: edges and facts. The catalogs' upsert counts come first, in
+    // the reference's order (`etl_pipeline.py:340-380`); their write follows.
     phase("load") {
-    // A4: consolidate per-sheet catalog fragments, first-sheet-wins
-    // (priority = position in the fragment sequence, made explicit).
-    if (catalogFragments.nonEmpty) {
-      val consolidated = graft.ops.Relational.dedupKeepFirst(
-        catalogFragments.zipWithIndex
-          .map { case (df, i) => df.withColumn("__prio", lit(i)) }
-          .reduce(_ unionByName _),
-        Seq("codigo"), Seq(col("__prio").asc)).drop("__prio")
-        .withColumn("classificacao", lit(null).cast("string"))
-        .withColumn("status", lit(Schemas.Status.Ativo))
-      inserted("insumos") = store.upsert("insumos", consolidated)
+      // exact upsert rowcount (database.py:270-280): one per distinct PK
+      for (t <- Seq("insumos", "composicoes"); rows <- incoming.get(t))
+        inserted(t) = rows.dropDuplicates("codigo").count()
+      analitico.foreach { case (_, _, insumoEdges, subcompEdges) =>
+        // S12: edges are truncate-reloaded each month (etl_pipeline.py:359-360).
+        store.overwrite("composicao_insumos", insumoEdges)
+        inserted("composicao_insumos") = insumoEdges.count()
+        store.overwrite("composicao_subcomposicoes", subcompEdges)
+        inserted("composicao_subcomposicoes") = subcompEdges.count()
+      }
+      if (priceFragments.nonEmpty)
+        inserted("precos_insumos_mensal") =
+          store.appendIgnore("precos_insumos_mensal", priceFragments.reduce(_ unionByName _))
+      if (custoFragments.nonEmpty)
+        inserted("custos_composicoes_mensal") =
+          store.appendIgnore("custos_composicoes_mensal", custoFragments.reduce(_ unionByName _))
     }
 
-    analitico.foreach { case (parents, _, insumoEdges, subcompEdges) =>
-      val compCatalog = parents
-        .withColumn("grupo", lit(null).cast("string"))
-        .withColumn("status", lit(Schemas.Status.Ativo))
-      inserted("composicoes") = store.upsert("composicoes", compCatalog)
-      // S12: edges are truncate-reloaded each month (etl_pipeline.py:359-360).
-      store.overwrite("composicao_insumos", insumoEdges)
-      inserted("composicao_insumos") = insumoEdges.count()
-      store.overwrite("composicao_subcomposicoes", subcompEdges)
-      inserted("composicao_subcomposicoes") = subcompEdges.count()
-    }
-
-    if (priceFragments.nonEmpty)
-      inserted("precos_insumos_mensal") =
-        store.appendIgnore("precos_insumos_mensal", priceFragments.reduce(_ unionByName _))
-    if (custoFragments.nonEmpty)
-      inserted("custos_composicoes_mensal") =
-        store.appendIgnore("custos_composicoes_mensal", custoFragments.reduce(_ unionByName _))
-    }
-
+    // One write per catalog: the upsert, template rows for codes the edges
+    // need but the merged catalog lacks (J1-J3, etl_pipeline.py:287-338) and
+    // every status derived from the log (W1/J4). The upsert resets the status
+    // of each row it takes and the derivation is idempotent, so this one
+    // pass ends where the reference's per-load syncs do.
     phase("repair_and_sync") {
-    // Placeholder repair (etl_pipeline.py:287-338): children referenced by
-    // the loaded edges but absent from the catalogs get template rows, so
-    // FK integrity holds by construction (J6 as an invariant, not a hope).
-    analitico.foreach { case (parents, childDetails, insumoEdges, subcompEdges) =>
-      val missingIns = Lifecycle.missingCodes(
-        store.read("composicao_insumos"), "insumo_filho_codigo", store.read("insumos"))
-      val insRows = Lifecycle.placeholderRows(missingIns,
-          childDetails.filter(col("tipo") === Schemas.ItemType.Insumo)
-            .select("codigo", "descricao", "unidade"),
-          cfg("PLACEHOLDER_INSUMO_DESC"), cfg("PLACEHOLDER_UNIT"))
-        .withColumn("classificacao", lit(null).cast("string"))
-        .withColumn("status", lit(Schemas.Status.Ativo))
-      val nIns = store.appendIgnore("insumos", insRows)
-
-      val allCompRefs = store.read("composicao_subcomposicoes")
-        .select(col("composicao_filho_codigo").as("c"))
-        .unionByName(store.read("composicao_insumos")
-          .select(col("composicao_pai_codigo").as("c")))
-        .unionByName(store.read("composicao_subcomposicoes")
-          .select(col("composicao_pai_codigo").as("c")))
-      val missingComp = Lifecycle.missingCodes(allCompRefs, "c", store.read("composicoes"))
-      val compRows = Lifecycle.placeholderRows(missingComp,
-          childDetails.filter(col("tipo") === Schemas.ItemType.Composicao)
-            .select("codigo", "descricao", "unidade"),
-          cfg("PLACEHOLDER_COMPOSICAO_DESC"), cfg("PLACEHOLDER_UNIT"))
-        .withColumn("grupo", lit(null).cast("string"))
-        .withColumn("status", lit(Schemas.Status.Ativo))
-      val nComp = store.appendIgnore("composicoes", compRows)
-      if (nIns > 0) inserted("insumos") = inserted.getOrElse("insumos", 0L) + nIns
-      if (nComp > 0) inserted("composicoes") = inserted.getOrElse("composicoes", 0L) + nComp
+      if (inserted.contains("manutencoes_historico") || incoming.nonEmpty) {
+        for ((table, tipo, template) <- Seq(
+            ("insumos", Schemas.ItemType.Insumo, "PLACEHOLDER_INSUMO_DESC"),
+            ("composicoes", Schemas.ItemType.Composicao, "PLACEHOLDER_COMPOSICAO_DESC"))) {
+          val merged = incoming.get(table)
+            .fold(store.read(table))(Relational.upsert(store.read(table), _, Seq("codigo")))
+            .withColumn("__placeholder", lit(false))
+          val repaired = analitico.fold(merged) { case (_, childDetails, insumoEdges, subcompEdges) =>
+            val needed =
+              if (table == "insumos") insumoEdges.select(col("insumo_filho_codigo").as("c"))
+              else Seq(subcompEdges.select(col("composicao_filho_codigo").as("c")),
+                insumoEdges.select(col("composicao_pai_codigo").as("c")),
+                subcompEdges.select(col("composicao_pai_codigo").as("c"))).reduce(_ unionByName _)
+            merged.unionByName(asCatalog(table, Lifecycle.placeholderRows(
+                Lifecycle.missingCodes(needed, "c", merged),
+                childDetails.filter(col("tipo") === tipo).select("codigo", "descricao", "unidade"),
+                cfg(template), cfg("PLACEHOLDER_UNIT")))
+              .withColumn("__placeholder", lit(true)))
+          }
+          val rows = Lifecycle.syncStatus(repaired, store.read("manutencoes_historico"), tipo,
+              cfg("DEACTIVATION_KEYWORD"))
+            .cache() // one pass counts the placeholders and feeds the write
+          val n = rows.filter(col("__placeholder")).count()
+          if (n > 0) inserted(table) = inserted.getOrElse(table, 0L) + n
+          store.overwrite(table, rows.drop("__placeholder"))
+          rows.unpersist()
+        }
+      }
     }
 
-    // Re-derive statuses after the dim loads: the upsert rewrites whole
-    // rows (status included), while in the reference PG's column-list
-    // INSERT leaves absent columns untouched. Status is a pure function
-    // of the immutable maintenance log, so recomputing it restores the
-    // same end state idempotently.
-    if (analitico.nonEmpty || catalogFragments.nonEmpty) syncStatuses()
+    // S13: every registered table exists after a run; only the ones this
+    // run left absent are written (empty), so a full load writes none.
+    phase("bootstrap") {
+      Schemas.all.keys.filterNot(store.exists).foreach(t => store.overwrite(t, store.read(t)))
     }
 
     val anyData = inserted.values.sum > 0
@@ -266,15 +259,5 @@ class PipelineETL(spark: SparkSession, store: graft.store.TableStore, cfg: Engin
       if (errors.isEmpty) s"processed ${files.length} sheet file(s) for $dataRef"
       else s"completed with ${errors.size} sheet error(s): ${errors.keys.mkString(", ")}",
       inserted.keys.toSeq, inserted.toMap, errors.toMap, phaseSeconds.toMap)
-  }
-
-  /** W1/J4 applied to both catalogs after a maintenance load. */
-  private def syncStatuses(): Unit = {
-    val manut = store.read("manutencoes_historico")
-    val kw = cfg("DEACTIVATION_KEYWORD")
-    store.overwrite("insumos",
-      Lifecycle.syncStatus(store.read("insumos"), manut, Schemas.ItemType.Insumo, kw))
-    store.overwrite("composicoes",
-      Lifecycle.syncStatus(store.read("composicoes"), manut, Schemas.ItemType.Composicao, kw))
   }
 }

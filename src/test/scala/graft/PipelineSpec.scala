@@ -2,9 +2,11 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.config.EngineConfig
+import graft.model.Schemas
 import graft.pipeline.PipelineETL
 import graft.store.TableStore
 
@@ -63,6 +65,50 @@ class PipelineSpec extends SparkSpec {
       "13/2025;INSUMO;3;DATA INVÁLIDA;ALTERAÇÃO",
       "02/2025;INSUMO;abc;CÓDIGO INVÁLIDO;ALTERAÇÃO")
     dir.toString
+  }
+
+  /** February on top of `fixtures()`: insumo 1 re-described, 9 new, 2
+    * re-listed; the structure names a composition (400) no catalog holds.
+    * Two maintenance files: insumo 2 gets an event later than January's
+    * deactivation, insumo 4 an event older than any deactivation, and the
+    * placeholder 400 is deactivated. */
+  private def february(): String = {
+    val dir = Paths.get(tmpDir("graft_staging_m2"))
+    write(dir, "ISD_202502.csv",
+      "Código do Insumo;Descrição do Insumo;Unidade;SP",
+      "1;AREIA MÉDIA (NOVA);M3;125,00",
+      "2;CIMENTO CP-II;KG;0,95",
+      "9;BRITA 1;M3;80,00")
+    write(dir, "Analitico_202502.csv",
+      "Código da Composição;Tipo Item;Código do Item;Coeficiente;Descrição;Unidade",
+      "100;COMPOSICAO_PAI;;;ALVENARIA DE VEDAÇÃO;M2",
+      "100;INSUMO;9;4,0;BRITA 1;M3",
+      "100;COMPOSICAO;400;1,0;COMP SUMIDA;M2")
+    write(dir, "Manutencoes_Insumos_202502.csv",
+      "Referência;Tipo;Código;Descrição;Manutenção",
+      "03/2025;INSUMO;2;CIMENTO CP-II;ALTERAÇÃO DE PREÇO",
+      "01/2025;INSUMO;4;CAL HIDRATADA;ALTERAÇÃO DE DESCRIÇÃO")
+    write(dir, "Manutencoes_Composicoes_202502.csv",
+      "Referência;Tipo;Código;Descrição;Manutenção",
+      "02/2025;COMPOSICAO;400;COMP SUMIDA;DESATIVAÇÃO")
+    dir.toString
+  }
+
+  private def statuses(store: TableStore, table: String): Map[Int, String] =
+    store.read(table).select("codigo", "status").as[(Int, String)].collect().toMap
+
+  /** A store that counts the writes each table receives. */
+  private class CountingStore(root: String) extends TableStore(spark, root) {
+    val writes = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    override def overwrite(table: String, df: DataFrame): Unit = {
+      writes(table) += 1; super.overwrite(table, df)
+    }
+    override def upsert(table: String, df: DataFrame, tiebreak: Seq[Column]): Long = {
+      writes(table) += 1; super.upsert(table, df, tiebreak)
+    }
+    override def appendIgnore(table: String, df: DataFrame, tiebreak: Seq[Column]): Long = {
+      writes(table) += 1; super.appendIgnore(table, df, tiebreak)
+    }
   }
 
   private def runOnce(): (TableStore, graft.pipeline.RunReport) = {
@@ -200,18 +246,16 @@ class PipelineSpec extends SparkSpec {
   test("second month accumulates facts, dims upsert, edges reload") {
     val store = new TableStore(spark, tmpDir("graft_wh"))
     val pipeline = new PipelineETL(spark, store, EngineConfig.load(env = Map.empty))
-    pipeline.run(fixtures(), 2025, 1)
+    val jan = Paths.get(fixtures())
+    // a second January log file: insumo 4 is deactivated in January too
+    write(jan, "Manutencoes_Extra_202501.csv",
+      "Referência;Tipo;Código;Descrição;Manutenção",
+      "02/2025;INSUMO;4;CAL HIDRATADA;DESATIVAÇÃO")
+    pipeline.run(jan.toString, 2025, 1)
+    assert(statuses(store, "insumos")(2) == "DESATIVADO")
+    assert(statuses(store, "insumos")(4) == "DESATIVADO")
 
-    val dir2 = Paths.get(tmpDir("graft_staging_m2"))
-    write(dir2, "ISD_202502.csv",
-      "Código do Insumo;Descrição do Insumo;Unidade;SP",
-      "1;AREIA MÉDIA (NOVA);M3;125,00",
-      "9;BRITA 1;M3;80,00")
-    write(dir2, "Analitico_202502.csv",
-      "Código da Composição;Tipo Item;Código do Item;Coeficiente;Descrição;Unidade",
-      "100;COMPOSICAO_PAI;;;ALVENARIA DE VEDAÇÃO;M2",
-      "100;INSUMO;9;4,0;BRITA 1;M3")
-    val r2 = pipeline.run(dir2.toString, 2025, 2)
+    val r2 = pipeline.run(february(), 2025, 2)
     assert(r2.status == "SUCESSO", r2)
 
     // facts: both months present (append-ignore keeps January)
@@ -230,6 +274,70 @@ class PipelineSpec extends SparkSpec {
       .select("composicao_pai_codigo", "insumo_filho_codigo")
       .as[(Int, Int)].collect().toSet
     assert(edges == Set((100, 9)))
+
+    // statuses across months: re-listed after a later non-deactivating
+    // event -> ATIVO; deactivated, not re-listed, only an older event
+    // since -> still DESATIVADO; a placeholder whose latest event
+    // deactivates it is written DESATIVADO
+    val insStatus = statuses(store, "insumos")
+    assert(insStatus(2) == "ATIVO")
+    assert(insStatus(4) == "DESATIVADO")
+    assert(insStatus(1) == "ATIVO" && insStatus(9) == "ATIVO")
+    val compStatus = statuses(store, "composicoes")
+    assert(compStatus(400) == "DESATIVADO")
+    assert(compStatus(100) == "ATIVO")
+  }
+
+  test("each table is written once per run, the log once per maintenance file") {
+    val store = new CountingStore(tmpDir("graft_wh"))
+    val pipeline = new PipelineETL(spark, store, EngineConfig.load(env = Map.empty))
+    pipeline.run(fixtures(), 2025, 1)
+    assert(store.writes == Schemas.all.keys.map(_ -> 1).toMap)
+
+    store.writes.clear()
+    val r2 = pipeline.run(february(), 2025, 2)
+    assert(r2.status == "SUCESSO", r2)
+    // no cost sheet in February: its table exists and is left alone
+    assert(store.writes ==
+      (Schemas.all.keys.toSet - "custos_composicoes_mensal").map(_ -> 1).toMap
+        .updated("manutencoes_historico", 2))
+
+    val empty = new CountingStore(tmpDir("graft_wh"))
+    new PipelineETL(spark, empty, EngineConfig.load(env = Map.empty))
+      .run(tmpDir("graft_staging_empty"), 2025, 1)
+    assert(empty.writes == Schemas.all.keys.map(_ -> 1).toMap)
+    for (t <- Schemas.all.keys) {
+      assert(empty.exists(t), s"$t absent after an empty run")
+      assert(empty.read(t).count() == 0)
+    }
+  }
+
+  test("cells quoted as the workbook converter writes them load as their text") {
+    // XlsxToCsv quotes a cell holding the separator or a `"` and doubles
+    // its quotes: a hyperlink code cell, an inch mark, a header with `;`
+    val dir = Paths.get(tmpDir("graft_staging_quoted"))
+    write(dir, "ISD_202501.csv",
+      "Código do Insumo;Descrição do Insumo;Unidade;\"Obs; nota\";SP",
+      "5;\"TUBO PVC DN 1/2\"\"\";M;x;3,50")
+    write(dir, "CSD_202501.csv",
+      ";;;SP;",
+      "Código da Composição;Descrição da Composição;Unidade;Custo Total;",
+      "\"=HIPERLINK(\"\"#Analitico!A11\"\",\"\"100\"\"),(100)\";ALVENARIA;M2;1234,56;")
+    val store = new TableStore(spark, tmpDir("graft_wh"))
+    val report = new PipelineETL(spark, store, EngineConfig.load(env = Map.empty))
+      .run(dir.toString, 2025, 1)
+    assert(report.sheetErrors.isEmpty, report.sheetErrors)
+    val ins = store.read("insumos").select("codigo", "descricao")
+      .as[(Int, String)].collect().toMap
+    assert(ins == Map(5 -> "TUBO PVC DN 1/2\""))
+    val precos = store.read("precos_insumos_mensal")
+      .select(col("insumo_codigo"), col("uf"), col("preco_mediano").cast("string"))
+      .as[(Int, String, String)].collect().toSet
+    assert(precos == Set((5, "SP", "3.500000")))
+    val custos = store.read("custos_composicoes_mensal")
+      .select(col("composicao_codigo"), col("uf"), col("custo_total").cast("string"))
+      .as[(Int, String, String)].collect().toSet
+    assert(custos == Set((100, "SP", "1234.560000")))
   }
 
   test("all sheets failing and nothing loaded yields FALHA") {
